@@ -147,7 +147,14 @@ def merge_hulls(
     (processPlanetNotes_22_createBaseTables_tables.sql:249-347) — the
     same merge shape as merge_tile_counts and the streaming cluster
     store's generation fold.
+
+    Null keys (e.g. an unassigned country_id) are dropped from both the
+    published hulls and the batch: a null key matches neither the semi
+    nor the anti join, so keeping it would add one more null-key row per
+    generation instead of merging them.
     """
+    existing = existing.where(F.col("key").isNotNull())
+    delta_points = delta_points.where(F.col(key_col).isNotNull())
     dkeys = delta_points.select(F.col(key_col).cast("long").alias("key")).distinct()
     old_pts = (
         existing.join(dkeys, "key", "left_semi")

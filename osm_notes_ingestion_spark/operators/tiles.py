@@ -4,23 +4,65 @@ Reference analog: the WMS render layer — wms.notes_wms point table +
 GeoServer tiling + year-bucket SLD rules (sql/wms/prepareDatabase.sql:32-60,
 sld/OpenNotes.sld:15-203). The engine materializes the rollup itself.
 
-Scale design: the raw points are aggregated ONCE at the finest requested
-zoom (single shuffle, map-side partial aggregation shrinks it); every
-coarser zoom is derived from the finest tile table by integer shifts
-(tile z−1 = sum of its 4 z children) — the multi-zoom pyramid never
-touches the fact table again. At 100 TB the z-level pyramid is built
-from a table of ≤ 4^z rows, which is negligible.
+Scale design: a pyramid is two aggregations whatever its zoom span.
+The raw points are aggregated ONCE at the finest requested zoom (map-side
+partial aggregation shrinks that shuffle); each finest-tile row is then
+exploded into its ancestor at every requested zoom by integer shifts
+(x >> (max_zoom − z)) and summed per (z, x, y). The fact table is
+scanned once, the plan holds two exchanges and no Union, and the second
+aggregation reads a table of ≤ 4^max_zoom rows — negligible at 100 TB.
 """
 
 from __future__ import annotations
 
 import math
-from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.mercator import tile_x_col, tile_y_col
+
+
+def _pyramid(
+    points: DataFrame,
+    max_zoom: int,
+    min_zoom: int,
+    lat_col: str,
+    lon_col: str,
+    keys: list[str],
+    inputs: list[Column],
+    finest_aggs: list[Column],
+    merge_aggs: list[Column],
+) -> DataFrame:
+    """(z, x, y, *keys, *merged state) for every zoom in [min_zoom, max_zoom].
+
+    Aggregation 1 groups the non-null points at max_zoom by (x, y, *keys)
+    with `finest_aggs` over `inputs`; every finest row is exploded to its
+    ancestor tile at each zoom; aggregation 2 merges the state per
+    (z, x, y, *keys) with `merge_aggs`. Two shuffles, any zoom span.
+    """
+    finest = (
+        points.where(F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull())
+        .select(
+            tile_x_col(F.col(lon_col), max_zoom).alias("x"),
+            tile_y_col(F.col(lat_col), max_zoom).alias("y"),
+            *inputs,
+        )
+        .groupBy("x", "y", *keys)
+        .agg(*finest_aggs)
+    )
+    zooms = F.array(*[F.lit(z) for z in range(min_zoom, max_zoom + 1)])
+    return (
+        finest.select(F.explode(zooms).alias("z"), "*")
+        .withColumns(
+            {
+                "x": F.expr(f"shiftright(x, {max_zoom} - z)"),
+                "y": F.expr(f"shiftright(y, {max_zoom} - z)"),
+            }
+        )
+        .groupBy("z", "x", "y", *keys)
+        .agg(*merge_aggs)
+    )
 
 
 def tile_counts(
@@ -30,7 +72,6 @@ def tile_counts(
     lat_col: str = "lat",
     lon_col: str = "lon",
     extra_dims: tuple[str, ...] = (),
-    strategy: str = "pyramid",
 ) -> DataFrame:
     """(z, x, y, [extra_dims...], cnt) for every zoom in [min_zoom, max_zoom].
 
@@ -38,60 +79,19 @@ def tile_counts(
     the analog of the reference's year_created_at/year_closed_at buckets
     (sql/wms/prepareDatabase.sql:33-40).
 
-    strategy:
-      "pyramid"  — aggregate once at max_zoom, derive parents by integer
-        shifts over the tiny tile table. Minimum shuffle volume; one
-        (cheap) stage per zoom level.
-      "exploded" — compute the finest tile JVM-side, explode each row to
-        all requested zooms, aggregate once. ONE stage total; map-side
-        partial aggregation caps the shuffle at (distinct tiles per
-        partition × zooms), so it stays scale-sane. Preferred when stage
-        scheduling latency dominates (interactive/small jobs).
-    Both produce identical results (asserted in tests).
+    Points are counted once per finest tile, then each finest tile's
+    count is added to its ancestor at every zoom: one fact scan, two
+    shuffles and no Union for any zoom span (plan-pinned in
+    tests/test_plans.py). Rows with a null coordinate are dropped.
     """
-    pts = points.where(F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull())
-    if strategy == "exploded":
-        zooms = list(range(min_zoom, max_zoom + 1))
-        fx = tile_x_col(F.col(lon_col), max_zoom)
-        fy = tile_y_col(F.col(lat_col), max_zoom)
-        exploded = pts.select(
-            F.explode(F.array(*[F.lit(z) for z in zooms])).alias("z"),
-            fx.alias("_x"),
-            fy.alias("_y"),
-            *[F.col(c) for c in extra_dims],
-        ).select(
-            "z",
-            F.expr(f"shiftright(_x, {max_zoom} - z)").alias("x"),
-            F.expr(f"shiftright(_y, {max_zoom} - z)").alias("y"),
-            *extra_dims,
-        )
-        return exploded.groupBy("z", "x", "y", *extra_dims).agg(F.count("*").alias("cnt"))
-    finest = (
-        pts.select(
-            F.lit(max_zoom).alias("z"),
-            tile_x_col(F.col(lon_col), max_zoom).alias("x"),
-            tile_y_col(F.col(lat_col), max_zoom).alias("y"),
-            *[F.col(c) for c in extra_dims],
-        )
-        .groupBy("z", "x", "y", *extra_dims)
-        .agg(F.count("*").alias("cnt"))
+    dims = list(extra_dims)
+    return _pyramid(
+        points, max_zoom, min_zoom, lat_col, lon_col,
+        keys=dims,
+        inputs=[F.col(c) for c in dims],
+        finest_aggs=[F.count("*").alias("cnt")],
+        merge_aggs=[F.sum("cnt").alias("cnt")],
     )
-    levels = [finest]
-    cur = finest
-    for z in range(max_zoom - 1, min_zoom - 1, -1):
-        cur = (
-            cur.select(
-                F.lit(z).alias("z"),
-                F.shiftright("x", 1).alias("x"),
-                F.shiftright("y", 1).alias("y"),
-                *[F.col(c) for c in extra_dims],
-                "cnt",
-            )
-            .groupBy("z", "x", "y", *extra_dims)
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        levels.append(cur)
-    return reduce(DataFrame.unionByName, levels)
 
 
 def check_pyramid(tiles: DataFrame) -> DataFrame:
@@ -289,11 +289,13 @@ def tile_distinct(
     a mergeable EXACT distinct set instead: Spark's bitmap functions map
     id -> (bucket = bitmap_bucket_number, bit = bitmap_bit_position)
     bijectively into fixed 4 KB bucket bitmaps, bitmap_construct_agg per
-    (tile, bucket) builds the per-tile id-set, parents OR their four
-    children's bitmaps (bitmap_or_agg = set union), and
-    sum(bitmap_count) per tile reads the exact cardinality. The fact
-    table is scanned ONCE for the whole pyramid; every coarser level
-    shuffles only (tiles x touched buckets) rows of <= 4 KB each.
+    (finest tile, bucket) builds the per-tile id-set, each finest row
+    is exploded to its ancestor at every zoom and the ancestors OR the
+    bitmaps (bitmap_or_agg = set union), and sum(bitmap_count) per tile
+    reads the exact cardinality. The fact table is scanned ONCE for the
+    whole pyramid; the merge shuffles only (finest tiles x touched
+    buckets x zooms) rows of <= 4 KB each, in a fixed number of
+    exchanges whatever the zoom span.
 
     100-TB notes: the bucket dimension shards a hot tile's id-set across
     reducers — a worst-case tile holding the whole id domain costs
@@ -307,46 +309,23 @@ def tile_distinct(
     the full int64 range — non-positive ids land in bucket <= 0 with
     mirrored positions (probed and pinned in tests).
     """
-    pts = points.where(F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull())
     ident = F.col(id_col).cast("long")
     dims = list(extra_dims)
-    finest = (
-        pts.select(
-            F.lit(max_zoom).alias("z"),
-            tile_x_col(F.col(lon_col), max_zoom).alias("x"),
-            tile_y_col(F.col(lat_col), max_zoom).alias("y"),
+    merged = _pyramid(
+        points, max_zoom, min_zoom, lat_col, lon_col,
+        keys=dims + ["bkt"],
+        inputs=[
             *[F.col(c) for c in dims],
             F.bitmap_bucket_number(ident).alias("bkt"),
             F.bitmap_bit_position(ident).alias("pos"),
-        )
-        .groupBy("z", "x", "y", *dims, "bkt")
-        .agg(F.count("*").alias("cnt"), F.bitmap_construct_agg("pos").alias("bm"))
+        ],
+        finest_aggs=[F.count("*").alias("cnt"), F.bitmap_construct_agg("pos").alias("bm")],
+        merge_aggs=[F.sum("cnt").alias("cnt"), F.bitmap_or_agg("bm").alias("bm")],
     )
-
-    def _finish(level: DataFrame) -> DataFrame:
-        return level.groupBy("z", "x", "y", *dims).agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum(F.bitmap_count("bm")).alias("uniq"),
-        )
-
-    out = [_finish(finest)]
-    cur = finest
-    for z in range(max_zoom - 1, min_zoom - 1, -1):
-        cur = (
-            cur.select(
-                F.lit(z).alias("z"),
-                F.shiftright("x", 1).alias("x"),
-                F.shiftright("y", 1).alias("y"),
-                *dims,
-                "bkt",
-                "cnt",
-                "bm",
-            )
-            .groupBy("z", "x", "y", *dims, "bkt")
-            .agg(F.sum("cnt").alias("cnt"), F.bitmap_or_agg("bm").alias("bm"))
-        )
-        out.append(_finish(cur))
-    return reduce(DataFrame.unionByName, out)
+    return merged.groupBy("z", "x", "y", *dims).agg(
+        F.sum("cnt").alias("cnt"),
+        F.sum(F.bitmap_count("bm")).alias("uniq"),
+    )
 
 
 def tile_distinct_hll(
@@ -360,52 +339,24 @@ def tile_distinct_hll(
 ) -> DataFrame:
     """Approx twin of tile_distinct: (z, x, y, cnt, uniq_est) with a
     fixed-size Apache DataSketches HLL sketch per tile instead of exact
-    bitmaps. hll_sketch_agg at the finest zoom, hll_union_agg up the
-    pyramid, hll_sketch_estimate at read. Union-merged estimates can
-    differ from direct per-tile sketching by a few per mille (the two
-    paths promote sparse->dense representations at different moments),
-    but both stay inside the lgk error bound — the pinned contract is
-    accuracy vs the EXACT count at every level
-    (tests/test_tile_distinct.py). 2^lgk bytes of state
-    per tile regardless of id-domain size; standard error ~= 1.04 /
+    bitmaps. hll_sketch_agg at the finest zoom, hll_union_agg of the
+    finest sketches under each ancestor, hll_sketch_estimate at read.
+    Union-merged estimates can differ from direct per-tile sketching by
+    a few per mille (the two paths promote sparse->dense
+    representations at different moments), but both stay inside the lgk
+    error bound — the pinned contract is accuracy vs the EXACT count at
+    every level (tests/test_tile_distinct.py). 2^lgk bytes of state per
+    tile regardless of id-domain size; standard error ~= 1.04 /
     sqrt(2^lgk) (~1.6% at the lgk=12 default). Use when the id domain
     is unbounded (url/host strings, 64-bit ids) and exact bitmaps would
     shard into too many buckets; the estimate column is clearly named so
     downstream cannot mistake it for the exact path.
     """
-    pts = points.where(F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull())
-    finest = (
-        pts.select(
-            F.lit(max_zoom).alias("z"),
-            tile_x_col(F.col(lon_col), max_zoom).alias("x"),
-            tile_y_col(F.col(lat_col), max_zoom).alias("y"),
-            F.col(id_col).alias("_id"),
-        )
-        .groupBy("z", "x", "y")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.hll_sketch_agg("_id", F.lit(lgk)).alias("sk"),
-        )
+    merged = _pyramid(
+        points, max_zoom, min_zoom, lat_col, lon_col,
+        keys=[],
+        inputs=[F.col(id_col).alias("_id")],
+        finest_aggs=[F.count("*").alias("cnt"), F.hll_sketch_agg("_id", F.lit(lgk)).alias("sk")],
+        merge_aggs=[F.sum("cnt").alias("cnt"), F.hll_union_agg("sk").alias("sk")],
     )
-
-    def _finish(level: DataFrame) -> DataFrame:
-        return level.select(
-            "z", "x", "y", "cnt", F.hll_sketch_estimate("sk").alias("uniq_est")
-        )
-
-    out = [_finish(finest)]
-    cur = finest
-    for z in range(max_zoom - 1, min_zoom - 1, -1):
-        cur = (
-            cur.select(
-                F.lit(z).alias("z"),
-                F.shiftright("x", 1).alias("x"),
-                F.shiftright("y", 1).alias("y"),
-                "cnt",
-                "sk",
-            )
-            .groupBy("z", "x", "y")
-            .agg(F.sum("cnt").alias("cnt"), F.hll_union_agg("sk").alias("sk"))
-        )
-        out.append(_finish(cur))
-    return reduce(DataFrame.unionByName, out)
+    return merged.select("z", "x", "y", "cnt", F.hll_sketch_estimate("sk").alias("uniq_est"))

@@ -25,6 +25,8 @@ terms folded with bitwise OR — no UDF, no Python.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -113,7 +115,9 @@ def bbox_file_stats(path: str, lat_col: str = "lat", lon_col: str = "lon"):
     design: one footer read per file (metadata, not data), the same
     O(#files) listing cost any planner pays.
 
-    Returns (files, rowgroups): lists of dicts with lat/lon min/max.
+    Returns (files, rowgroups): lists of dicts with lat/lon min/max. A
+    row group written without statistics gets a ±inf (unprunable)
+    envelope.
 
     QA/evidence helper for LOCAL paths (os.listdir + pyarrow footers);
     on an object store the scan planner itself does this pruning — use
@@ -122,6 +126,13 @@ def bbox_file_stats(path: str, lat_col: str = "lat", lon_col: str = "lon"):
     import os
 
     import pyarrow.parquet as pq
+
+    def _minmax(stats):
+        # no min/max in the footer: the planner cannot prune this row
+        # group, so report it as spanning everything
+        if stats is None or not stats.has_min_max:
+            return -math.inf, math.inf
+        return stats.min, stats.max
 
     files, rowgroups = [], []
     names = sorted(
@@ -135,14 +146,14 @@ def bbox_file_stats(path: str, lat_col: str = "lat", lon_col: str = "lon"):
         fenv = None
         for rg in range(md.num_row_groups):
             g = md.row_group(rg)
-            la = g.column(idx[lat_col]).statistics
-            lo = g.column(idx[lon_col]).statistics
+            la_min, la_max = _minmax(g.column(idx[lat_col]).statistics)
+            lo_min, lo_max = _minmax(g.column(idx[lon_col]).statistics)
             env = {
                 "file": fname,
-                "lat_min": la.min,
-                "lat_max": la.max,
-                "lon_min": lo.min,
-                "lon_max": lo.max,
+                "lat_min": la_min,
+                "lat_max": la_max,
+                "lon_min": lo_min,
+                "lon_max": lo_max,
             }
             rowgroups.append(env)
             if fenv is None:

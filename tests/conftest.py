@@ -15,7 +15,7 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(parallelism=8, app_name="pytest")
+    s = get_spark(parallelism=int(os.environ.get("SPARK_GRAFT_CPUS", "8")), app_name="pytest")
     yield s
 
 

@@ -190,3 +190,26 @@ def test_merge_hulls_incremental_equals_full(spark):
            for r in state.collect()}
     assert got == want
     assert 9 in got and got[9][1] == 3
+
+
+def test_merge_hulls_drops_null_keys(spark):
+    # an unassigned point (null key) in every generation: the null key
+    # matches neither side of the semi/anti split, so without filtering
+    # each merge would add one more null-key hull row
+    from osm_notes_ingestion_spark.operators.hull import merge_hulls
+
+    schema = "country_id long, lat double, lon double"
+    gens = [
+        spark.createDataFrame(
+            [(1, 0.0, 0.0), (1, 1.0, 0.0), (1, 0.0, 1.0), (None, 5.0, 5.0)], schema
+        ),
+        spark.createDataFrame([(1, 2.0, 2.0), (None, 6.0, 6.0)], schema),
+        spark.createDataFrame([(None, 7.0, 7.0)], schema),
+    ]
+    state = convex_hull(gens[0])
+    for delta in gens[1:]:
+        state = merge_hulls(state, delta)
+    got = {r["key"]: r["n_vertices"] for r in state.collect()}
+    full = gens[0].unionByName(gens[1]).unionByName(gens[2]).where("country_id IS NOT NULL")
+    want = {r["key"]: r["n_vertices"] for r in convex_hull(full).collect()}
+    assert got == want == {1: 4}

@@ -119,3 +119,22 @@ def test_skewed_data_keeps_balanced_files(spark, tmp_path):
     )
     # no file more than ~4x the median (range partitioner balances rows)
     assert sizes[-1] <= 4 * sizes[len(sizes) // 2], sizes
+
+
+def test_missing_statistics_are_unprunable(tmp_path):
+    # a writer that skips column statistics leaves nothing to prune on:
+    # the envelope must span everything instead of raising
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "nostats"
+    d.mkdir()
+    table = pa.table({"lat": [10.0, 11.0], "lon": [20.0, 21.0]})
+    pq.write_table(table, str(d / "part-0.parquet"), write_statistics=False)
+    files, rgs = bbox_file_stats(str(d))
+    assert len(files) == 1 and len(rgs) == 1
+    for env in files + rgs:
+        assert (env["lat_min"], env["lat_max"]) == (-np.inf, np.inf)
+        assert (env["lon_min"], env["lon_max"]) == (-np.inf, np.inf)
+    bbox = dict(lat_min=40.0, lat_max=50.0, lon_min=0.0, lon_max=10.0)
+    assert bbox_overlap_fraction(files, **bbox) == 1.0

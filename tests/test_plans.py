@@ -318,3 +318,29 @@ def test_nearest_leg_arrow_is_on_filtered_branch(spark, sf_dir):
     assert "= -1)" in plan  # ...and it sits above the NO_MATCH filter
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize("lo,hi", [(0, 8), (4, 6)])
+def test_tile_pyramid_is_two_shuffles_any_span(spark, tmp_path, lo, hi):
+    """tile_counts builds every zoom from one finest-tile aggregation
+    exploded to its ancestors: one fact scan, exactly two shuffle
+    exchanges and no Union, whatever the zoom span (a chained per-level
+    rollup would add one exchange and one union branch per zoom)."""
+    from osm_notes_ingestion_spark.operators.tiles import tile_counts
+
+    p = str(tmp_path / "pts")
+    spark.range(200).selectExpr(
+        "id", "CAST(id % 80 AS DOUBLE) AS lat", "CAST(id % 170 AS DOUBLE) AS lon",
+        "id % 3 AS country_id",
+    ).write.parquet(p)
+    plan = (
+        tile_counts(spark.read.parquet(p), max_zoom=hi, min_zoom=lo, extra_dims=("country_id",))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    import re
+
+    assert plan.count("FileScan parquet") == 1, plan
+    assert re.findall(r"\bExchange (\w+)", plan) == ["hashpartitioning"] * 2, plan
+    assert "Union" not in plan, plan

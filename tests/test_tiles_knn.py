@@ -82,12 +82,50 @@ def test_knn_wraps_antimeridian(spark):
     assert set(res["id"]) == {1, 2}
 
 
-def test_exploded_strategy_equals_pyramid(pts):
-    a = tile_counts(pts, max_zoom=6, min_zoom=2).toPandas()
-    b = tile_counts(pts, max_zoom=6, min_zoom=2, strategy="exploded").toPandas()
-    ka = a.set_index(["z", "x", "y"])["cnt"].sort_index()
-    kb = b.set_index(["z", "x", "y"])["cnt"].sort_index()
-    assert ka.equals(kb)
+def _tile_counts_brute_force(rows, max_zoom, min_zoom):
+    """Oracle: bin every point with both coordinates directly at each
+    zoom (numpy twin of the mercator binning) and count per (z, x, y, dim)."""
+    pdf = pd.DataFrame(rows, columns=["lat", "lon", "yr"]).dropna(subset=["lat", "lon"])
+    want = {}
+    for z in range(min_zoom, max_zoom + 1):
+        x, y = tile_xy_np(pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), z)
+        for tx, ty, yr in zip(x.tolist(), y.tolist(), pdf["yr"].tolist()):
+            k = (z, tx, ty, None if pd.isna(yr) else int(yr))
+            want[k] = want.get(k, 0) + 1
+    return want
+
+
+@pytest.mark.parametrize("lo,hi", [(0, 8), (5, 5)])
+def test_tile_counts_matches_brute_force(spark, lo, hi):
+    # half spread over the globe, half in one city block (many points
+    # per finest tile), plus null coordinates, a null dim and the edges
+    rng = np.random.default_rng(5)
+    n = 600
+    spread = np.arange(n) % 2 == 0
+    lat = np.where(spread, rng.uniform(-89.0, 89.0, n), 48.85 + rng.uniform(-0.02, 0.02, n))
+    lon = np.where(spread, rng.uniform(-180.0, 180.0, n), 2.35 + rng.uniform(-0.02, 0.02, n))
+    rows = [
+        (
+            None if i % 17 == 0 else float(lat[i]),
+            None if i % 23 == 0 else float(lon[i]),
+            (2023, 2024, None)[i % 3],
+        )
+        for i in range(n)
+    ]
+    rows += [(90.0, 180.0, 2023), (-90.0, -180.0, 2024), (0.0, 0.0, None)]
+    df = spark.createDataFrame(rows, "lat double, lon double, yr int")
+    got = {
+        (r["z"], r["x"], r["y"], r["yr"]): r["cnt"]
+        for r in tile_counts(df, max_zoom=hi, min_zoom=lo, extra_dims=("yr",)).collect()
+    }
+    assert got == _tile_counts_brute_force(rows, hi, lo)
+
+
+def test_tile_counts_all_null_coords_is_empty(spark):
+    df = spark.createDataFrame(
+        [(None, 1.0, 1), (2.0, None, 1), (None, None, 2)], "lat double, lon double, yr int"
+    )
+    assert tile_counts(df, max_zoom=8, extra_dims=("yr",)).collect() == []
 
 
 def test_merge_tile_counts_with_retraction(spark):
